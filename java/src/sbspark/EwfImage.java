@@ -373,31 +373,4 @@ final class EwfImage {
     }
     return copied == len ? dst : java.util.Arrays.copyOfRange(dst, 0, copied);
   }
-
-  /**
-   * Stream-scan decompressed media [start, start+length): automaton
-   * state carries across chunk boundaries, offsets are region-local —
-   * identical semantics to Ac.scanFile on a raw image.
-   */
-  List<Long> scan(Ac ac, long start, long length) throws IOException {
-    List<Long> hits = new ArrayList<>();
-    if (start >= mediaSize || length <= 0) return hits;
-    length = Math.min(length, mediaSize - start);
-    byte[] out = scratch(OUT_BUF, (int) chunkSize);
-    long pos = start;
-    long end = start + length;
-    int state = 0;
-    int idx = (int) (pos / chunkSize);
-    while (pos < end && idx < chunkPath.length && hits.size() < ac.cap) {
-      int valid = chunk(idx, out);
-      int lo = (int) (pos - idx * chunkSize);
-      int hi = (int) Math.min(valid, Math.min(chunkSize, end - idx * chunkSize));
-      if (hi > lo) {
-        state = ac.scanRange(out, lo, hi, pos - start, state, hits);
-      }
-      pos = (idx + 1L) * chunkSize;
-      idx++;
-    }
-    return hits;
-  }
 }

@@ -16,34 +16,35 @@ import org.apache.spark.sql.api.java.UDF4;
  * sb_scan_all(path, start, valid_length, spec) -&gt;
  * struct&lt;hits:array&lt;bigint&gt;, spans:array&lt;...&gt;, ents:array&lt;...&gt;&gt;.
  *
- * ONE positioned read per sub-chunk feeds all three evidence scans —
- * the signature scan (Ac), the string-span scan (Strs, continuation-
- * aware) and the entropy window scan (Ent) — instead of each stage
- * re-reading the evidence (3x corpus egress at object-store scale).
- * The sub-chunk block [start - backMargin, start + valid_length +
- * overlap) loads once into a BlockIo; the three kernels run unchanged
- * against it (Strs' rare backward-barrier / forward-extension reads
- * outside the block fall through to the underlying source, so
- * semantics are byte-identical to the standalone paths — pinned by
- * differential tests in tests/test_fused_scan.py).
+ * The engine's one evidence scan: ONE positioned read per sub-chunk
+ * feeds the signature scan (Ac), the string-span scan (Strs,
+ * continuation-aware) and the entropy window scan (Ent), the way the
+ * reference's chunk reader feeds its scan, string and entropy workers
+ * from one buffer (src/pipeline/mod.rs:168-254). The sub-chunk block
+ * [start - backMargin, start + valid_length + overlap) loads once into
+ * a BlockIo; the kernels run unchanged against it (Strs' rare
+ * backward-barrier / forward-extension reads outside the block fall
+ * through to the underlying source). Rows equal the chunk-table path's
+ * (sb_scan_bytes / sb_scan_strings_bytes / sb_entropy_bytes over the
+ * parent chunks) — pinned by differential tests in
+ * tests/test_fused_scan.py and tests/test_engine_one_pass.py.
  *
- * Per-kernel semantics parity:
+ * Per-kernel semantics:
  *  - hits: packed (localOffset &lt;&lt; 16 | patIdx) with offsets relative
  *    to the SUB-CHUNK start; the scan covers [start, start+vlen+
  *    overlap) with a fresh automaton state, and the caller's
  *    normalize_hits drops localOffset &gt;= valid_length — exactly the
- *    parent-geometry dedup rule, so the union over sub-chunks equals
- *    the chunk-planned scan (overlap &gt;= max pattern length is the
+ *    parent-geometry dedup rule (overlap &gt;= max pattern length is the
  *    parent path's own cross-boundary requirement). The Ac hit cap
- *    applies per sub-chunk here vs per chunk there — divergent only
- *    past 1e6 hits per sub-chunk.
- *  - spans: Strs.scanEvidence on the same (start, vlen) rows the
- *    strings path plans — identical by construction.
- *  - ents: Ent.scanEvidence — identical when the sub-chunk tiling is
- *    window-aligned (the Python wrapper gates on that).
+ *    applies per sub-chunk.
+ *  - spans: Strs.scanEvidence, whose backward barrier walk and forward
+ *    run extension pin rows to the parent chunk geometry.
+ *  - ents: Ent.scanEvidence — the Python planner aligns every sub-chunk
+ *    start to the entropy window grid of its parent.
  *
- * Spec: acSpec + "\n" + strsSpec + "\n" + entSpec (none of the three
- * sub-specs can contain a newline).
+ * Spec: overlap + "\n" + acSpec + "\n" + strsSpec + "\n" + entSpec (no
+ * sub-spec contains a newline). An empty strsSpec / entSpec line
+ * disables that sub-scan and returns an empty array in its place.
  */
 public class ScanAllEvidenceUdf implements UDF4<String, Long, Long, String, Row> {
   private static final ConcurrentHashMap<String, Boolean> IS_EWF = new ConcurrentHashMap<>();
@@ -131,12 +132,12 @@ public class ScanAllEvidenceUdf implements UDF4<String, Long, Long, String, Row>
   public Row call(String path, Long start, Long validLength, String spec) throws Exception {
     int nl1 = spec.indexOf('\n');
     int nl2 = spec.indexOf('\n', nl1 + 1);
-    Ac ac = Ac.get(spec.substring(0, nl1));
-    Strs strs = Strs.get(spec.substring(nl1 + 1, nl2));
-    // empty third line = entropy detection disabled: skip the Ent
-    // sub-scan and return empty ents (the Python wrapper then omits
-    // the entropy tables entirely)
-    String entSpec = spec.substring(nl2 + 1);
+    int nl3 = spec.indexOf('\n', nl2 + 1);
+    long overlap = Long.parseLong(spec.substring(0, nl1));
+    Ac ac = Ac.get(spec.substring(nl1 + 1, nl2));
+    String strsSpec = spec.substring(nl2 + 1, nl3);
+    Strs strs = strsSpec.isEmpty() ? null : Strs.get(strsSpec);
+    String entSpec = spec.substring(nl3 + 1);
     Ent ent = entSpec.isEmpty() ? null : Ent.get(entSpec);
 
     Boolean ewf = IS_EWF.get(path);
@@ -145,22 +146,28 @@ public class ScanAllEvidenceUdf implements UDF4<String, Long, Long, String, Row>
       IS_EWF.putIfAbsent(path, ewf);
     }
     if (ewf) {
-      return scanAll(new EwfSrc(EwfImage.get(path)), ac, strs, ent, start, validLength);
+      return scanAll(new EwfSrc(EwfImage.get(path)), overlap, ac, strs, ent, start, validLength);
     }
-    // per-call channel, same fd-leak rationale as StringScanEvidenceUdf
+    // per-call channel: each call scans a whole sub-chunk (>= MiBs),
+    // which amortizes the open; an unbounded per-path cache would leak
+    // one fd per evidence file for the executor lifetime (a directory
+    // sweep over thousands of images hits ulimit). EwfImage stays
+    // cached: its value is the parsed chunk TABLE, and image counts
+    // are small.
     try (FileChannel ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)) {
-      return scanAll(new RawSrc(ch), ac, strs, ent, start, validLength);
+      return scanAll(new RawSrc(ch), overlap, ac, strs, ent, start, validLength);
     }
   }
 
   private static Row scanAll(
-      Src src, Ac ac, Strs strs, Ent ent, long start, long vlen) throws IOException {
+      Src src, long overlap, Ac ac, Strs strs, Ent ent, long start, long vlen)
+      throws IOException {
     long total = src.length();
-    long blockStart = Math.max(0, start - BACK_MARGIN);
-    // overlap from the strings spec: the parent-geometry read margin
-    // shared by the hit scan (cross-boundary matches) and most of the
-    // span scan's forward window
-    long blockEnd = Math.min(start + vlen + strs.overlap, total);
+    // the back margin serves only Strs' barrier walk
+    long blockStart = strs == null ? start : Math.max(0, start - BACK_MARGIN);
+    // overlap: the parent-geometry read margin shared by the hit scan
+    // (cross-boundary matches) and most of the span scan's forward window
+    long blockEnd = Math.min(start + vlen + overlap, total);
     byte[] block =
         blockEnd > blockStart ? src.read(blockStart, (int) (blockEnd - blockStart)) : new byte[0];
     BlockIo io = new BlockIo(src, block, blockStart);
@@ -179,9 +186,8 @@ public class ScanAllEvidenceUdf implements UDF4<String, Long, Long, String, Row>
       hits = ScanGates.filter(ac, io::read, start, hits, vlen);
     }
 
-    List<Row> spans = strs.scanEvidence(io, total, start, vlen);
-    List<Row> ents =
-        ent == null ? new ArrayList<>() : ent.scanEvidence(io, total, start, vlen);
+    List<Row> spans = strs == null ? new ArrayList<>() : strs.scanEvidence(io, total, start, vlen);
+    List<Row> ents = ent == null ? new ArrayList<>() : ent.scanEvidence(io, total, start, vlen);
     return RowFactory.create(hits, spans, ents);
   }
 }

@@ -139,7 +139,9 @@ final class Strs {
    * [base, base+blob.length) of the evidence. eCap = parent read end
    * (runs truncate there); io enables UTF-8 forward extension past the
    * window (null on the bytes path, where the blob IS the parent read).
-   * Mirrors strings_scan._subchunk_spans / _blob_spans exactly.
+   * Mirrors strings_scan._blob_spans exactly; on the evidence path the
+   * continuation-aware window makes a sub-chunk's rows equal the rows
+   * its parent chunk's _blob_spans scan owns in [ownStart, ownEnd).
    */
   List<Row> scanWindow(byte[] blob, long base, long ownStart, long ownEnd, long eCap, Io io)
       throws IOException {
@@ -252,9 +254,9 @@ final class Strs {
       // extend when the run reaches the window end OR ends within 3
       // bytes of it: a multibyte unit straddling the window cut leaves
       // a dangling prefix the structural scan excludes, but the
-      // parent-geometry run continues through it (mirrors the Python
-      // kernel; extendRun's truncated-unit logic reassembles it or
-      // ends the run where it truly ends)
+      // parent-geometry run continues through it (extendRun's
+      // truncated-unit logic reassembles it or ends the run where it
+      // truly ends)
       if (io != null && base + n < eCap && n - i <= 3) {
         run = extendRun(io, runG, blob, rs, n, eCap);
       } else {
@@ -361,7 +363,7 @@ final class Strs {
     }
   }
 
-  // ---- evidence-path windowing (mirrors _subchunk_spans) ---------------
+  // ---- evidence-path windowing (continuation-aware sub-chunks) --------
 
   /** Barrier-aware backward window start (no run crosses w0-1 -> w0). */
   long findWindowStart(Io io, long p, long loCap, long total) throws IOException {

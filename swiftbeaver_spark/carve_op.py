@@ -43,7 +43,7 @@ of bytes per hit) to each executor once — versus re-shuffling the
 chunk bytes themselves, which is what the round-7 collect_list
 reassembly did (measured 3x the strategy-1 wall at sf1; the stream
 pass removes both the 614 MB shuffle and the duplicated Arrow
-transfer, tools/profile_carve_chunkjoin.py). Callers with hit sets
+transfer; SCALE.md round 8). Callers with hit sets
 too large to broadcast can force `strategy="cogroup"`, which shuffles
 chunk bytes exactly once on narrow bucket keys.
 """
@@ -170,7 +170,7 @@ def _collect_zip_eocds_kw(reader, lo: int, hi: int) -> dict:
 # to any next-own-magic handler (tar, footer-to-next-header shapes).
 #
 # bzip2 is NOT here either (added r12 on the zip analogy, REMOVED r13
-# after the density A/B, tools/bench_bzip2_density.py): on a planted
+# after the density A/B recorded in SCALE.md): on a planted
 # dense-"BZh" text corpus the bucketed branch measured 7.3x slower
 # with end markers every MiB and 8.1x slower with none. The sweep
 # reads the index saves are NOT the dominant term for an early-exit
@@ -226,8 +226,8 @@ def carve_hits_with_evidence(
     mapInPandas dispatches per-group -- swept groups through the
     bucket index, the rest per-hit. The r12 shape (one filtered branch
     per family unioned with the rest) re-evaluated the upstream hits
-    plan once per branch when it was uncached -- three evidence
-    signature scans on the multi-pass path."""
+    plan once per branch when it was uncached -- three signature scans
+    of the evidence."""
 
     # shuffle width scales with evidence bytes, floored at parallelism
     # (r14, the shared evidence-path rule): hit density is roughly

@@ -17,11 +17,10 @@ from dataclasses import dataclass, field, replace
 
 DEFAULT_CHUNK_SIZE = 512 * 1024 * 1024  # reference src/constants.rs:22
 DEFAULT_OVERLAP = 64 * 1024  # reference src/constants.rs:25
-# sub-range size for the PYTHON-side fused scans (strings, entropy):
-# the I/O chunk size is tuned for JVM scan + carve streaming, but a
-# Python kernel at ~1 s per 4 MiB needs many more plan rows than
-# ceil(size / 512 MiB) to use a cluster (round-9 1 GiB stress: the
-# strings stage ran on 2 of 32 cores, 121 s -> 11 s at this granule)
+# sub-chunk length of the one-pass evidence scan (fused_scan.py): the
+# I/O chunk size is tuned for carve streaming, but ceil(size / 512 MiB)
+# plan rows leave a cluster idle (round-9 1 GiB stress: the strings
+# stage ran on 2 of 32 cores, 121 s -> 11 s at this granule)
 PY_SCAN_GRANULE = 16 * 1024 * 1024
 MIB = 1024 * 1024
 GIB = 1024 * MIB

@@ -35,10 +35,6 @@ from swiftbeaver_spark.strings_scan import scan_string_artefacts, scan_string_sp
 
 from pyspark.storagelevel import StorageLevel
 
-# Storage level for the one-pass raw metadata frame (see _run_one_pass);
-# module-level so tools/bench_persist_level.py can A/B levels in-session.
-ONE_PASS_RAW_STORAGE = StorageLevel.MEMORY_AND_DISK
-
 
 def make_run_id() -> str:
     """`YYYYMMDDTHHMMSSZ_<hex>` (reference src/config.rs:114-126)."""
@@ -84,9 +80,10 @@ class RunResult:
     def observed_summary(self) -> DataFrame | None:
         """run_summary built from the stage observations instead of
         re-deriving every consumed subtree — with caching OFF that
-        re-derivation is a second full evidence scan on the fused path
-        (round-9: 32.5 s of a 61 s 1 GiB run). Valid only after an
-        action has driven every observed stage table TO COMPLETION:
+        re-derivation re-runs every stage it counts (round-9, on the
+        old multi-pass evidence path: 32.5 s of a 61 s 1 GiB run).
+        Valid only after an action has driven every observed stage
+        table TO COMPLETION:
         CollectMetrics captures whatever rows flowed through the FIRST
         action on the observed frame, so a partial pre-drive (show(3)/
         take — limit short-circuits the scan) fills an observation with
@@ -97,7 +94,7 @@ class RunResult:
         (summary_from_counts). Returns None — callers fall back to the
         lazy run_summary — if any observation is still unfilled, probed
         non-blockingly (Observation.get would otherwise wait forever).
-        The chunks-side counters stay a real aggregate — on the fused
+        The chunks-side counters stay a real aggregate — on the evidence
         path the chunk plan is pure range arithmetic (no evidence
         read), on the chunk-table path the table is cached."""
         if "hits" not in self.observations:
@@ -159,6 +156,10 @@ class RunResult:
 class Engine:
     """Public API analog of `run_pipeline` (reference src/pipeline/mod.rs:98-129).
 
+    Two evidence strategies (see `run`): the one-pass evidence scan
+    (default for `evidence_path`; needs the JVM kernel) and the chunk
+    table (`chunk_join=True` or `evidence_bytes`; needs no JDK).
+
     Carve strategy selection (`carve`): pass `evidence_path` to use
     positioned reads — each task re-opens the evidence (right whenever
     executors can reach it as a path: local, NFS, fuse-mounted object
@@ -176,9 +177,9 @@ class Engine:
     Arrow conversions on top of the 4 GiB cache). This is the CLUSTER
     strategy — the budget is per-executor on a many-node cluster
     (100 TB / 1000 nodes = 100 GB/node, disk-backed) — single-JVM
-    local runs should use the default fused/positioned path, which
-    never materializes chunk bytes. The chunk path bounds each
-    in-flight hit's window at carve_op._WINDOW_CAP_LIMIT (1.5 GiB):
+    local runs should use the default evidence path (one-pass scan,
+    positioned carve reads), which never materializes chunk bytes.
+    The chunk path bounds each in-flight hit's window at carve_op._WINDOW_CAP_LIMIT (1.5 GiB):
     per-type windows above that are rejected at plan time, and a carve
     the window cut short (while evidence continues) carries an explicit
     `over_cap` error — file types that genuinely need multi-GiB windows
@@ -252,154 +253,76 @@ class Engine:
         evidence_bytes: bytes | None = None,
         chunk_join: bool = False,
         cache_intermediates: bool = False,
-        one_pass: bool | None = None,
     ) -> RunResult:
-        """`cache_intermediates=True` persists each stage output
+        """Two evidence strategies, identical tables row for row
+        (differential-pinned in tests/test_engine_one_pass.py):
+
+        - `evidence_path` alone: the one-pass scan (fused_scan.
+          scan_all_from_evidence). ONE positioned read per sub-chunk
+          feeds signature + strings + entropy, on raw and EWF/E01
+          evidence alike; carve and the browser parsers read only hit
+          windows. The scan's raw metadata frame persists for the
+          RunResult's lifetime (that persist is what makes the evidence
+          read happen once); RunResult.unpersist() frees it. Needs the
+          JVM kernel, which javac builds — without a JDK this raises
+          RuntimeError carrying the build or registration failure.
+        - `chunk_join=True` (with `evidence_path`) or `evidence_bytes`:
+          the chunk table. Chunk bytes are read once into a cached table
+          that feeds scan, strings, entropy and carve; every stage has a
+          Python twin, so this route needs no JDK.
+
+        `cache_intermediates=True` persists each stage output
         (MEMORY_AND_DISK — recomputable on executor loss, unlike
         localCheckpoint) so multi-consumer reads evaluate each stage
         ONCE: the reference's single pass computes its run counters
         for free, but the Spark analog's run_summary otherwise
-        re-derives every consumed subtree — on the fused evidence
-        path that is a second full evidence scan through the Python
-        strings kernel (measured: 32.5 s of a 61 s 1 GiB end-to-end
+        re-derives every consumed subtree (measured on the old
+        multi-pass evidence path: 32.5 s of a 61 s 1 GiB end-to-end
         run). The setting for full runs that drive several tables
         (write_tables, the stress bench); OFF by default so
         single-table uses stay cache-free. Stage outputs are metadata
         rows (spans/hits/carves), orders of magnitude smaller than
-        evidence. Under one-pass the string_spans table is NOT
+        evidence. On the evidence path the string_spans table is NOT
         re-persisted — it is a projection of the already-persisted raw
         frame, and double-storing the span content bytes OOMed an
         8 GiB heap at 10 GiB evidence (r13). The caches are
         CALLER-owned: call RunResult.unpersist() when done, or
-        repeated runs in one session accumulate executor storage.
-
-        `one_pass=True` runs the scans through the fused one-pass
-        multi-scan (fused_scan.scan_all_from_evidence): ONE positioned
-        read per sub-chunk feeds signature + strings + entropy, instead
-        of each scan re-reading the evidence — 3x less corpus egress at
-        object-store scale and, on E01, 3x less re-decompression (the
-        round-11 measurement: each pass on compressed containers pays
-        the full inflate again, which is why default-path E01 ran ~2x
-        raw). Requires the JVM kernel and entropy-window-aligned
-        geometry (ValueError otherwise — same loud contract as the
-        fused module). The raw metadata frame persists for the
-        RunResult's lifetime (it is what makes the read happen once);
-        RunResult.unpersist() frees it. `one_pass=None` (default)
-        resolves via _one_pass_auto: one-pass whenever the
-        preconditions hold (raw AND EWF — the r12 cold-cache A/B
-        measured 0.16-0.27x the multi-pass walls with no regime where
-        multi-pass wins), multi-pass otherwise (JRE-only hosts, the
-        kernel escape hatch, misaligned geometry, string scan off).
-        Results are byte-identical either way (differential-pinned in
-        tests/test_fused_scan.py and tests/test_engine_one_pass.py)."""
-        if one_pass and (evidence_path is None or chunk_join):
-            raise ValueError(
-                "one_pass=True requires evidence_path and excludes "
-                "chunk_join (the one-pass scan reads the evidence "
-                "directly; the chunk-table strategy materializes bytes)"
-            )
+        repeated runs in one session accumulate executor storage."""
         if evidence_path is not None and not chunk_join:
-            use_one_pass = one_pass
-            if use_one_pass is None:
-                use_one_pass = self._one_pass_auto(evidence_path)
-            if use_one_pass:
-                return self._run_one_pass(evidence_path, cache_intermediates)
-        if evidence_path is not None and not chunk_join:
-            # fused path: the chunk *plan* (arithmetic rows) distributes;
-            # each scan reads its own byte ranges — chunk bytes never
-            # cross the JVM<->Python boundary nor get cached
-            from swiftbeaver_spark.chunking import plan_chunks
-            from swiftbeaver_spark.entropy import entropy_regions_from_evidence
-            from swiftbeaver_spark.scanner import scan_evidence
-            from swiftbeaver_spark.strings_scan import spans_from_evidence
-
+            return self._run_one_pass(evidence_path, cache_intermediates)
+        if evidence_path is not None:
             from swiftbeaver_spark.source import evidence_length
 
+            chunks = self.chunks_from_file(evidence_path)
             total = evidence_length(evidence_path)
-            plan = plan_chunks(self.spark, total, self.cfg.chunk_size, self.cfg.overlap)
-            if self.cfg.max_bytes is not None:
-                plan = plan.where(F.col("start") < int(self.cfg.max_bytes))
-            if self.cfg.max_chunks is not None:
-                plan = plan.where(F.col("chunk_id") < int(self.cfg.max_chunks))
-            hits = scan_evidence(self.spark, evidence_path, self.cfg, plan=plan)
-            carved = self.carve(hits, evidence_path=evidence_path)
-            tables = {"chunks": plan, "hits": hits, "carved_files": carved}
-            if self.cfg.enable_string_scan:
-                spans = spans_from_evidence(self.spark, evidence_path, self.cfg)
-                tables["string_spans"] = spans
-                tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
-            if self.cfg.enable_entropy_detection:
-                tables["entropy_regions"] = entropy_regions_from_evidence(
-                    self.spark, evidence_path, self.cfg
-                )
+        elif evidence_bytes is not None:
+            chunks = self.chunks_from_bytes(evidence_bytes)
+            total = len(evidence_bytes)
         else:
-            if evidence_path is not None:
-                from swiftbeaver_spark.source import evidence_length
+            raise ValueError("need evidence_path or evidence_bytes")
+        chunks = chunks.cache()  # one pass feeds scan, strings, entropy, carve
 
-                chunks = self.chunks_from_file(evidence_path)
-                total = evidence_length(evidence_path)
-            elif evidence_bytes is not None:
-                chunks = self.chunks_from_bytes(evidence_bytes)
-                total = len(evidence_bytes)
-            else:
-                raise ValueError("need evidence_path or evidence_bytes")
-            chunks = chunks.cache()  # one pass feeds scan, strings, entropy, carve
-
-            hits = self.hits(chunks)
-            # evidence_len from the plan's arithmetic — no aggregation job.
-            # Scan limits truncate the chunk table, so the byte horizon for
-            # over_cap-vs-EOF attribution is the last INCLUDED chunk's end,
-            # not the full media length (else a limit-cut carve would claim
-            # withheld-by-cap bytes that were never scanned).
-            horizon = total
-            if self.cfg.max_bytes is not None and self.cfg.max_bytes < total:
-                last = (max(self.cfg.max_bytes, 1) - 1) // self.cfg.chunk_size
-                horizon = min(horizon, (last + 1) * self.cfg.chunk_size)
-            if self.cfg.max_chunks is not None:
-                horizon = min(horizon, self.cfg.max_chunks * self.cfg.chunk_size)
-            carved = self.carve(hits, chunks=chunks, evidence_len=horizon)
-            tables = {"chunks": chunks, "hits": hits, "carved_files": carved}
-            if self.cfg.enable_string_scan:
-                spans = scan_string_spans(chunks, self.cfg)
-                tables["string_spans"] = spans
-                tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
-            if self.cfg.enable_entropy_detection:
-                tables["entropy_regions"] = entropy_regions(chunks, self.cfg)
+        hits = self.hits(chunks)
+        # evidence_len from the plan's arithmetic — no aggregation job.
+        # Scan limits truncate the chunk table, so the byte horizon for
+        # over_cap-vs-EOF attribution is the last INCLUDED chunk's end,
+        # not the full media length (else a limit-cut carve would claim
+        # withheld-by-cap bytes that were never scanned).
+        horizon = total
+        if self.cfg.max_bytes is not None and self.cfg.max_bytes < total:
+            last = (max(self.cfg.max_bytes, 1) - 1) // self.cfg.chunk_size
+            horizon = min(horizon, (last + 1) * self.cfg.chunk_size)
+        if self.cfg.max_chunks is not None:
+            horizon = min(horizon, self.cfg.max_chunks * self.cfg.chunk_size)
+        carved = self.carve(hits, chunks=chunks, evidence_len=horizon)
+        tables = {"chunks": chunks, "hits": hits, "carved_files": carved}
+        if self.cfg.enable_string_scan:
+            spans = scan_string_spans(chunks, self.cfg)
+            tables["string_spans"] = spans
+            tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
+        if self.cfg.enable_entropy_detection:
+            tables["entropy_regions"] = entropy_regions(chunks, self.cfg)
         return self._finish(tables, evidence_path, cache_intermediates)
-
-    def _one_pass_auto(self, evidence_path: str) -> bool:
-        """Auto rule for run(one_pass=None): one-pass IS the default
-        strategy whenever its preconditions hold (JVM kernel, entropy-
-        window-aligned geometry, string scan on) — for BOTH raw and EWF
-        evidence. The r12 cold-cache A/B (drop_caches before every run,
-        alternating modes in one session, 2 GiB) measured one-pass at
-        0.16x multi-pass on raw and 0.27x on E01 — the object-store
-        regime where every pass is real egress — while warm-page-cache
-        runs tie within host noise; there is no regime where multi-pass
-        wins, so it is the fallback, not the default. Results are
-        byte-identical (differential-pinned). Warns once per process
-        (warnings module default dedup) so the strategy is never
-        switched silently — the IVF auto-switch contract; pass
-        one_pass=False to force the multi-pass path."""
-        from swiftbeaver_spark.fused_scan import one_pass_geometry_ok
-        from swiftbeaver_spark.jvm import vec_kernel_active
-
-        if not self.cfg.enable_string_scan:
-            # the fused UDF always runs the span kernel; no spec form
-            # disables it, so string-scan-off runs keep the default path
-            return False
-        if not (one_pass_geometry_ok(self.cfg) and vec_kernel_active(self.spark)):
-            return False
-        import warnings
-
-        warnings.warn(
-            "evidence run: using the one-pass multi-scan (one positioned "
-            "read feeds signature+strings+entropy; measured 2.6-6x the "
-            "multi-pass path on a cold cache, a wash warm). Pass "
-            "one_pass=False to force the multi-pass path.",
-            stacklevel=3,
-        )
-        return True
 
     def _run_one_pass(self, evidence_path: str, cache_intermediates: bool) -> RunResult:
         """One-pass table graph: scan_all_from_evidence's raw metadata
@@ -410,32 +333,22 @@ class Engine:
         from swiftbeaver_spark.fused_scan import scan_all_from_evidence
         from swiftbeaver_spark.source import evidence_length
 
-        if not self.cfg.enable_string_scan:
-            raise ValueError(
-                "one_pass=True requires enable_string_scan (the fused "
-                "UDF always runs the span kernel); use the default path"
-            )
+        scans = scan_all_from_evidence(self.spark, evidence_path, self.cfg)
         total = evidence_length(evidence_path)
-        scans = scan_all_from_evidence(
-            self.spark,
-            evidence_path,
-            self.cfg,
-            max_bytes=self.cfg.max_bytes,
-            max_chunks=self.cfg.max_chunks,
-        )
         # the persist is what makes the evidence read happen ONCE: every
         # derived table reads through this metadata cache (one row per
         # sub-chunk: packed hits + span rows + entropy islands). The
         # frame is the one SIZE-PROPORTIONAL intermediate (span content
         # ~ the text share of the corpus); MEMORY_AND_DISK lets Spark
         # degrade it to disk partition-by-partition when it outgrows
-        # the storage pool — the in-session persist-level A/B
-        # (tools/bench_persist_level.py, r13) measured MEMORY_AND_DISK
-        # vs DISK_ONLY within noise at 4 GiB on local[32], so the
-        # graceful default keeps the memory-hit fast path where the
-        # frame fits and the disk shape where it does not. Module
-        # constant so the A/B tool can swap levels in one session.
-        raw = scans["raw"].persist(ONE_PASS_RAW_STORAGE)
+        # the storage pool — an in-session persist-level A/B (r13)
+        # measured MEMORY_AND_DISK vs DISK_ONLY within noise at 4 GiB
+        # on local[32], so the graceful default keeps the memory-hit
+        # fast path where the frame fits and the disk shape where it
+        # does not.
+        raw = scans["raw"].persist(StorageLevel.MEMORY_AND_DISK)
+        # the chunk *plan* (arithmetic rows, no evidence read) carries
+        # run_summary's bytes_scanned / chunks_processed
         plan = plan_chunks(self.spark, total, self.cfg.chunk_size, self.cfg.overlap)
         if self.cfg.max_bytes is not None:
             plan = plan.where(F.col("start") < int(self.cfg.max_bytes))
@@ -444,9 +357,10 @@ class Engine:
         hits = scans["hits"]
         carved = self.carve(hits, evidence_path=evidence_path)
         tables = {"chunks": plan, "hits": hits, "carved_files": carved}
-        spans = scans["string_spans"]
-        tables["string_spans"] = spans
-        tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
+        if self.cfg.enable_string_scan:
+            spans = scans["string_spans"]
+            tables["string_spans"] = spans
+            tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
         if self.cfg.enable_entropy_detection:
             tables["entropy_regions"] = scans["entropy_regions"]
         return self._finish(
@@ -471,8 +385,8 @@ class Engine:
         # raw-vs-observed mismatch was verified real on PySpark 4.1.2).
         persisted: list[DataFrame] = list(persisted_pre or [])
         if cache_intermediates:
-            # Under one-pass (persisted_pre holds the raw metadata
-            # frame) string_spans is a cheap PROJECTION of that
+            # On the evidence path (persisted_pre holds the one-pass
+            # raw metadata frame) string_spans is a cheap PROJECTION of that
             # already-persisted frame, and it carries the dominant
             # cache bytes (the span content strings — ~1.4M rows/GiB
             # on text-heavy evidence). Re-persisting it stores those

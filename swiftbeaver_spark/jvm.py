@@ -15,11 +15,12 @@ replicating numpy's pairwise tree so entropy doubles are bit-identical.
 Reference parity: the CPU scan loops of src/scanner/cpu.rs:40-69,
 src/strings/cpu.rs:42-216, and src/entropy.rs:19-91.
 
-The jar compiles lazily with the JDK that ships in the image (javac
-against pyspark's own jars) and registers into ANY session via
-ADD JAR + registerJavaFunction; every entry point falls back to the
-Python kernel if compilation or registration fails, so the engine
-keeps working on JRE-only machines.
+The jar compiles lazily with a JDK (javac against pyspark's own jars)
+and registers into ANY session via ADD JAR + registerJavaFunction.
+The chunk-table and catalog entry points fall back to their Python or
+Catalyst twins if compilation or registration fails; the direct
+evidence scan (sb_scan_all) has no twin, so an evidence-path run
+without the kernel raises with the recorded reason (`kernel_error`).
 """
 
 from __future__ import annotations
@@ -41,7 +42,6 @@ _SOURCES = (
     "DotsUdf.java",
     "Ent.java",
     "EntropyBytesUdf.java",
-    "EntropyEvidenceUdf.java",
     "EwfImage.java",
     "JaccardUdf.java",
     "MinHashUdf.java",
@@ -49,10 +49,8 @@ _SOURCES = (
     "SqDistsUdf.java",
     "ScanAllEvidenceUdf.java",
     "ScanBytesUdf.java",
-    "ScanEvidenceUdf.java",
     "SimHashUdf.java",
     "StringScanBytesUdf.java",
-    "StringScanEvidenceUdf.java",
     "Strs.java",
     "SubwordUdf.java",
 )
@@ -75,7 +73,10 @@ _SCAN_ALL_TYPE = (
 # can alias after a stopped session is garbage-collected, an instance
 # attribute cannot
 _MARKER = "_sb_kernel_registered"
-_BUILD_FAILED = False
+# why the kernel is unavailable in that session (absent when it is not)
+_ERROR_MARKER = "_sb_kernel_error"
+# why the last jar build failed in this process (None: no failure yet)
+_BUILD_ERROR: str | None = None
 
 
 def spec_for(
@@ -111,20 +112,20 @@ def _pyspark_jars() -> str:
 
 def kernel_jar() -> str | None:
     """Path to the built kernel jar, compiling it if needed (None if no
-    JDK or compilation fails)."""
-    global _BUILD_FAILED
+    JDK or compilation fails; the reason is kept in _BUILD_ERROR)."""
+    global _BUILD_ERROR
     jar_path = os.path.join(_JAVA_DIR, _JAR_NAME)
     srcs = [os.path.join(_JAVA_DIR, "src", "sbspark", s) for s in _SOURCES]
     if os.path.exists(jar_path) and all(
         os.path.getmtime(jar_path) >= os.path.getmtime(s) for s in srcs
     ):
         return jar_path
-    if _BUILD_FAILED:
+    if _BUILD_ERROR is not None:
         return None
     javac = shutil.which("javac")
     jar = shutil.which("jar")
     if javac is None or jar is None:
-        _BUILD_FAILED = True
+        _BUILD_ERROR = "no JDK: javac/jar not found on PATH"
         return None
     try:
         with tempfile.TemporaryDirectory() as tmp:
@@ -139,28 +140,34 @@ def kernel_jar() -> str | None:
             )
             os.replace(tmp_jar, jar_path)  # atomic: concurrent builders converge
         return jar_path
-    except (subprocess.CalledProcessError, OSError):
-        _BUILD_FAILED = True
+    except subprocess.CalledProcessError as e:
+        tool = os.path.basename(str(e.cmd[0]))
+        detail = (e.stderr or b"").decode("utf-8", "replace").strip()
+        _BUILD_ERROR = f"{tool} exited {e.returncode}: {detail}"
+        return None
+    except OSError as e:
+        _BUILD_ERROR = f"kernel jar build failed: {e}"
         return None
 
 
 def ensure_kernel(spark: SparkSession) -> bool:
-    """Register sb_scan_bytes / sb_scan_evidence into this session.
-    Works on sessions we did not create (driver harness) via ADD JAR;
-    returns False — Python fallback — on any failure."""
+    """Register the kernel UDFs (sb_scan_bytes, sb_scan_all, ...) into
+    this session. Works on sessions we did not create (driver harness)
+    via ADD JAR; returns False on any failure, recording the reason for
+    kernel_error()."""
     cached = getattr(spark, _MARKER, None)
     if cached is not None:
         return cached
     ok = False
+    error = None
     jar_path = kernel_jar()
-    if jar_path is not None:
+    if jar_path is None:
+        error = _BUILD_ERROR
+    else:
         try:
             spark.sql(f"ADD JAR '{jar_path}'")
             spark.udf.registerJavaFunction(
                 "sb_scan_bytes", "sbspark.ScanBytesUdf", "array<bigint>"
-            )
-            spark.udf.registerJavaFunction(
-                "sb_scan_evidence", "sbspark.ScanEvidenceUdf", "array<bigint>"
             )
             spark.udf.registerJavaFunction(
                 "sb_minhash", "sbspark.MinHashUdf", "array<bigint>"
@@ -182,13 +189,7 @@ def ensure_kernel(spark: SparkSession) -> bool:
                 "sb_scan_strings_bytes", "sbspark.StringScanBytesUdf", _SPAN_ROWS_TYPE
             )
             spark.udf.registerJavaFunction(
-                "sb_scan_strings", "sbspark.StringScanEvidenceUdf", _SPAN_ROWS_TYPE
-            )
-            spark.udf.registerJavaFunction(
                 "sb_entropy_bytes", "sbspark.EntropyBytesUdf", _ENT_ROWS_TYPE
-            )
-            spark.udf.registerJavaFunction(
-                "sb_entropy", "sbspark.EntropyEvidenceUdf", _ENT_ROWS_TYPE
             )
             spark.udf.registerJavaFunction(
                 "sb_scan_all", "sbspark.ScanAllEvidenceUdf", _SCAN_ALL_TYPE
@@ -198,13 +199,24 @@ def ensure_kernel(spark: SparkSession) -> bool:
                 "SELECT sb_scan_bytes(CAST('xabcx' AS BINARY), '10;616263') AS h"
             ).collect()[0]["h"]
             ok = list(probe) == [(1 << 16) | 0]
-        except Exception:
-            ok = False
+            if not ok:
+                error = f"kernel probe returned {list(probe)}"
+        except Exception as e:
+            error = f"kernel registration failed: {type(e).__name__}: {e}"
     try:
         setattr(spark, _MARKER, ok)
+        setattr(spark, _ERROR_MARKER, error)
     except AttributeError:  # exotic session proxies without __dict__
         pass
     return ok
+
+
+def kernel_error(spark: SparkSession) -> str | None:
+    """Why the kernel is not registered in `spark` (None when it is, or
+    when no reason was recorded)."""
+    if ensure_kernel(spark):
+        return None
+    return getattr(spark, _ERROR_MARKER, None)
 
 
 def vec_kernel_active(spark: SparkSession | None = None) -> bool:
@@ -215,8 +227,9 @@ def vec_kernel_active(spark: SparkSession | None = None) -> bool:
     non-empty value other than "0" counts as set (=1/true/yes all
     disable) — an incident escape hatch must not silently no-op on a
     plausible spelling. The env var forces the pinned bit-exact
-    Catalyst fallback — the A/B-measurement and incident escape hatch
-    for the WHOLE kernel family.
+    Catalyst/Python fallback — the A/B-measurement and incident escape
+    hatch for every kernel that has a twin. The direct evidence scan
+    (sb_scan_all) has none, so it gates on ensure_kernel alone.
 
     The gate resolves at plan-build time on the driver. Registration is
     session-scoped: callers holding a DataFrame should pass its

@@ -459,11 +459,10 @@ def test_run_cache_intermediates_same_tables(spark, tmp_path):
         # persisted frames (so derived stages keep matching the cache
         # by logical-plan equality); storage level shows on the
         # persisted frames RunResult tracks
-        # every tracked frame is persisted with a disk component
-        # (stage caches are MEMORY_AND_DISK; the one-pass RAW frame's
-        # level is the swappable engine.ONE_PASS_RAW_STORAGE constant
-        # — default MEMORY_AND_DISK, A/B-measured a wash in r13 — so
-        # this assertion pins only the disk fallback all levels share)
+        # every tracked frame is persisted with a disk component (the
+        # stage caches and the one-pass RAW frame are all
+        # MEMORY_AND_DISK; DISK_ONLY for the raw frame was A/B-measured
+        # a wash in r13)
         assert cached.persisted and all(
             df.storageLevel.useDisk for df in cached.persisted
         )

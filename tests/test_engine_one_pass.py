@@ -1,13 +1,11 @@
-"""Engine one-pass adoption (round 12, VERDICT r11 task 1) + ADVICE
-r11 closures.
-
-Engine.run(one_pass=True) must produce IDENTICAL tables to the default
-multi-pass fused path on raw and E01 evidence (the scans are the
-differential-pinned fused kernels; this file pins the ENGINE wiring:
-table graph, limits, persist lifetime, auto-switch rule), and the
-fused module must honor enable_entropy_detection=False (no entropy
-tables, no alignment gate — ADVICE r11) and the
-SPARK_GRAFT_NO_VEC_KERNEL hatch (loud ValueError — ADVICE r11).
+"""Engine evidence runs (Engine.run(evidence_path=...)) always use the
+one-pass scan (fused_scan.py), and must produce IDENTICAL tables to the
+chunk-table strategy (Engine.run(evidence_path=..., chunk_join=True))
+on raw and E01 evidence: string scan on/off x entropy on/off, scan
+limits, and an entropy window that divides neither the granule nor the
+chunk size with several sub-chunks per parent. This file pins the
+ENGINE wiring (table graph, limits, persist lifetime); the scan
+differentials themselves are in tests/test_fused_scan.py.
 """
 
 from __future__ import annotations
@@ -32,8 +30,8 @@ def require_kernel(spark):
 
 
 # engine geometry: PY_SCAN_GRANULE (16 MiB) >= chunk_size, so the
-# sub-chunk tiling degenerates to one sub-chunk per parent — window
-# aligned for any window size dividing chunk_size
+# sub-chunk tiling is one sub-chunk per parent unless a test shrinks
+# the granule (small_granule)
 CFG = dataclasses.replace(FUSED_CFG, chunk_size=2 << 20)
 
 TABLES = (
@@ -44,28 +42,51 @@ TABLES = (
     "carved_files",
     "chunks",
     "run_summary",
+    "browser_history",
+    "browser_cookies",
+    "browser_downloads",
 )
+
+
+@pytest.fixture
+def small_granule(monkeypatch):
+    """Several sub-chunks per 2 MiB parent inside Engine.run."""
+    import swiftbeaver_spark.fused_scan as fused_mod
+
+    monkeypatch.setattr(fused_mod, "PY_SCAN_GRANULE", GRANULE)
 
 
 def _tables(result):
     out = {}
     for name in TABLES:
-        out[name] = sorted(map(tuple, result[name].collect()))
+        if name not in result.tables:
+            continue
+        df = result[name]
+        if name == "chunks":  # plan rows vs chunk-table rows: geometry only
+            df = df.select("chunk_id", "start", "valid_length")
+        out[name] = sorted(map(tuple, df.collect()))
     return out
 
 
 def _assert_same_run(spark, path, cfg=CFG):
     eng = Engine(spark, cfg)
-    one = eng.run(evidence_path=path, one_pass=True)
+    one = eng.run(evidence_path=path)
     assert one.persisted, "one-pass must persist the raw metadata frame"
     try:
         got = _tables(one)
     finally:
         one.unpersist()
-    base = _tables(eng.run(evidence_path=path, one_pass=False))
-    for name in TABLES:
+    base = _tables(eng.run(evidence_path=path, chunk_join=True))
+    assert got.keys() == base.keys()
+    for name in base:
         assert got[name] == base[name], name
-    assert got["hits"] and got["carved_files"] and got["entropy_regions"]
+    assert got["hits"] and got["carved_files"]
+    if cfg.enable_entropy_detection:
+        assert got["entropy_regions"]
+    if cfg.enable_string_scan:
+        assert got["string_spans"]
+    else:
+        assert "string_spans" not in got
 
 
 def test_one_pass_matches_default_raw(spark, tmp_path):
@@ -82,56 +103,75 @@ def test_one_pass_matches_default_e01(spark, tmp_path):
     _assert_same_run(spark, p)
 
 
-def test_one_pass_matches_default_with_limits(spark, tmp_path):
+def test_one_pass_matches_default_with_limits(spark, tmp_path, small_granule):
     p = tmp_path / "ev.raw"
     p.write_bytes(build_image(13, 7 << 20))
     cfg = dataclasses.replace(CFG, max_bytes=3 << 20, max_chunks=3)
     _assert_same_run(spark, str(p), cfg)
+    cfg = dataclasses.replace(CFG, max_chunks=2)
+    _assert_same_run(spark, str(p), cfg)
 
 
-def test_auto_selects_one_pass_when_ready(spark, tmp_path):
-    """r12 rule: one-pass is the DEFAULT whenever the preconditions
-    hold — raw and E01 alike (the cold-cache A/B showed no regime
-    where multi-pass wins); misaligned geometry falls back quietly."""
-    import warnings as warnings_mod
-
+@pytest.mark.parametrize("strings", [True, False], ids=["strings", "no_strings"])
+@pytest.mark.parametrize("entropy", [True, False], ids=["entropy", "no_entropy"])
+def test_toggles_match_chunk_table_raw_and_e01(
+    spark, tmp_path, small_granule, strings, entropy
+):
     from swiftbeaver_spark.ewf import write_ewf
 
+    cfg = dataclasses.replace(
+        CFG, enable_string_scan=strings, enable_entropy_detection=entropy
+    )
+    data = build_image(16, 3 << 20)
     raw = tmp_path / "ev.raw"
-    raw.write_bytes(build_image(14, 2 << 20))
-    eng = Engine(spark, CFG)
-    with warnings_mod.catch_warnings():
-        warnings_mod.simplefilter("always")  # defeat once-per-process dedup
-        with pytest.warns(UserWarning, match="one-pass"):
-            res = eng.run(evidence_path=str(raw))
-    assert res.persisted  # raw auto-selects one-pass too
-    res.unpersist()
+    raw.write_bytes(data)
+    _assert_same_run(spark, str(raw), cfg)
     e01 = str(tmp_path / "ev.E01")
-    write_ewf(e01, build_image(14, 2 << 20), sectors_per_chunk=8)
-    res = eng.run(evidence_path=e01)
-    assert res.persisted
-    res.unpersist()
-    # misaligned entropy geometry: quiet multi-pass fallback
-    bad = Engine(spark, dataclasses.replace(CFG, entropy_window_size=3000))
-    res = bad.run(evidence_path=str(raw))
-    assert not res.persisted
+    write_ewf(e01, data, sectors_per_chunk=8)
+    _assert_same_run(spark, e01, cfg)
 
 
-def test_one_pass_true_rejects_other_strategies(spark, tmp_path):
-    eng = Engine(spark, CFG)
-    with pytest.raises(ValueError, match="one_pass"):
-        eng.run(evidence_bytes=b"\x00" * 1024, one_pass=True)
+def test_window_not_dividing_granule_matches_chunk_table(
+    spark, tmp_path, small_granule
+):
+    """entropy_window_size=3000 with several sub-chunks per parent:
+    previously routed quietly to a separate multi-pass path, now the
+    one-pass scan rounds its sub-chunks to whole windows."""
     p = tmp_path / "ev.raw"
-    p.write_bytes(b"\x00" * (1 << 20))
-    with pytest.raises(ValueError, match="one_pass"):
-        eng.run(evidence_path=str(p), chunk_join=True, one_pass=True)
+    p.write_bytes(build_image(17, 5 << 20))
+    _assert_same_run(spark, str(p), dataclasses.replace(CFG, entropy_window_size=3000))
+
+
+def test_evidence_runs_always_one_pass(spark, tmp_path):
+    """Every evidence_path run uses the one-pass scan (it persists the
+    raw metadata frame) — raw and E01, string scan off (the CLI
+    default) and a window that does not divide the granule included;
+    only chunk_join=True and evidence_bytes take the chunk table."""
+    from swiftbeaver_spark.ewf import write_ewf
+
+    data = build_image(14, 2 << 20)
+    raw = tmp_path / "ev.raw"
+    raw.write_bytes(data)
+    e01 = str(tmp_path / "ev.E01")
+    write_ewf(e01, data, sectors_per_chunk=8)
+    for cfg in (
+        CFG,
+        dataclasses.replace(CFG, enable_string_scan=False),
+        dataclasses.replace(CFG, entropy_window_size=3000),
+    ):
+        for path in (str(raw), e01):
+            res = Engine(spark, cfg).run(evidence_path=path)
+            assert res.persisted, (cfg, path)
+            res.unpersist()
+    eng = Engine(spark, CFG)
+    assert not eng.run(evidence_path=str(raw), chunk_join=True).persisted
+    assert not eng.run(evidence_bytes=data).persisted
 
 
 def test_detection_off_omits_entropy_tables(spark, tmp_path):
-    """ADVICE r11: with enable_entropy_detection False the fused scan
-    must not return entropy tables (previously they were built anyway,
-    with the alignment gate off — silent divergence), and misaligned
-    geometry must be accepted since no entropy windows are computed."""
+    """With enable_entropy_detection False the fused scan must not
+    return entropy tables, and any window size is accepted since no
+    entropy windows are computed."""
     p = tmp_path / "ev.raw"
     p.write_bytes(build_image(15, 3 << 20))
     cfg = dataclasses.replace(
@@ -145,21 +185,55 @@ def test_detection_off_omits_entropy_tables(spark, tmp_path):
         assert t["string_spans"].count() > 0
     finally:
         t["raw"].unpersist()
-    # engine auto-switch also declines (no string scan -> default path)
-    eng = Engine(spark, dataclasses.replace(CFG, enable_string_scan=False))
-    assert not eng._one_pass_auto(str(p))
+    res = Engine(spark, cfg).run(evidence_path=str(p))
+    assert "entropy_regions" not in res.tables
+    res.unpersist()
 
 
-def test_no_vec_kernel_hatch_disables_fused(spark, tmp_path, monkeypatch):
-    """ADVICE r11: the whole-kernel-family escape hatch must disable
-    sb_scan_all loudly (no Python fallback exists to mix in)."""
+def test_no_vec_kernel_hatch_keeps_evidence_scan(spark, tmp_path, monkeypatch):
+    """SPARK_GRAFT_NO_VEC_KERNEL switches kernels to their twins; the
+    evidence scan has no twin, so it keeps running in the JVM (and the
+    run's tables do not change)."""
     p = tmp_path / "ev.raw"
-    p.write_bytes(b"\x00" * (1 << 20))
+    p.write_bytes(build_image(18, 2 << 20))
+    base = Engine(spark, CFG).run(evidence_path=str(p))
+    want = _tables(base)
+    base.unpersist()
     monkeypatch.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
-    with pytest.raises(ValueError, match="JVM kernel"):
-        scan_all_from_evidence(spark, str(p), CFG, granule=GRANULE)
-    eng = Engine(spark, CFG)
-    assert not eng._one_pass_auto(str(p))
+    res = Engine(spark, CFG).run(evidence_path=str(p))
+    try:
+        assert res.persisted
+        assert _tables(res) == want
+    finally:
+        res.unpersist()
+
+
+def test_missing_kernel_error_names_reason_and_chunk_join(spark, tmp_path, monkeypatch):
+    """A kernel build failure on a fresh session surfaces in the error
+    an evidence run raises: the javac diagnostic itself, plus the
+    JDK-free chunk_join=True route — which still runs."""
+    import swiftbeaver_spark.jvm as jvm_mod
+
+    java_dir = tmp_path / "java"
+    (java_dir / "src" / "sbspark").mkdir(parents=True)
+    (java_dir / "src" / "sbspark" / "Broken.java").write_text(
+        "package sbspark; class Broken { int x = missing_symbol_xyz; }\n"
+    )
+    monkeypatch.setattr(jvm_mod, "_JAVA_DIR", str(java_dir))
+    monkeypatch.setattr(jvm_mod, "_SOURCES", ("Broken.java",))
+    monkeypatch.setattr(jvm_mod, "_BUILD_ERROR", None)
+    fresh = spark.newSession()
+    assert not jvm_mod.ensure_kernel(fresh)
+    assert "missing_symbol_xyz" in jvm_mod.kernel_error(fresh)
+    p = tmp_path / "ev.raw"
+    data = build_image(19, 1 << 20)
+    p.write_bytes(data)
+    eng = Engine(fresh, CFG)
+    with pytest.raises(RuntimeError) as err:
+        eng.run(evidence_path=str(p))
+    assert "missing_symbol_xyz" in str(err.value)
+    assert "chunk_join=True" in str(err.value)
+    assert eng.run(evidence_path=str(p), chunk_join=True)["hits"].count() > 0
 
 
 def test_zip_bucket_cache_batch_split_parity(spark, tmp_path):
@@ -220,7 +294,7 @@ def test_one_pass_jpeg_png_carve_content(spark, tmp_path):
     p = tmp_path / "ev.raw"
     p.write_bytes(bytes(buf))
     eng = Engine(spark, CFG)
-    res = eng.run(evidence_path=str(p), one_pass=True)
+    res = eng.run(evidence_path=str(p))
     try:
         rows = {
             r["file_type"]: r

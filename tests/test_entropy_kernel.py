@@ -1,7 +1,8 @@
 """JVM entropy-window kernel parity (round 11, VERDICT r10 task 1).
 
 The JVM kernel (java/src/sbspark/Ent.java) replaces the numpy bincount
-fold on both the chunk-table and fused-evidence paths. Parity must be
+fold on the chunk-table path and runs inside the one-pass evidence scan
+(fused_scan.py), which has no numpy twin. Parity must be
 BIT-EXACT: the per-count contribution table is exported from numpy in
 the spec string, and the JVM per-window sum replicates numpy's pairwise
 summation tree — these tests pin exact float equality across kernels on
@@ -19,11 +20,7 @@ import pytest
 
 from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.entropy import (
-    entropy_regions,
-    entropy_windows,
-    entropy_windows_from_evidence,
-)
+from swiftbeaver_spark.entropy import entropy_regions, entropy_windows
 from swiftbeaver_spark.jvm import ensure_kernel
 
 
@@ -113,17 +110,31 @@ def test_threshold_filter_identical(spark, monkeypatch):
     assert jvm == _rows(entropy_windows(chunks, cfg))
 
 
+def _evidence_windows(spark, path: str, cfg) -> list[tuple]:
+    """Per-window rows of the one-pass evidence scan: one sub-chunk per
+    window, so every pre-merged island is a single window."""
+    from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+
+    t = scan_all_from_evidence(spark, path, cfg, granule=cfg.entropy_window_size)
+    return _rows(t["entropy_windows"])
+
+
+def _numpy_windows(spark, monkeypatch, data: bytes, cfg) -> list[tuple]:
+    chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
+    with monkeypatch.context() as m:
+        m.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
+        return _rows(entropy_windows(chunks, cfg))
+
+
 def test_evidence_raw_bit_exact(spark, monkeypatch, tmp_path):
     cfg = _cfg(256, 0.0)
     data = mixed_blob(9, 1 << 19)
     p = tmp_path / "evidence.bin"
     p.write_bytes(data)
-    jvm = _rows(entropy_windows_from_evidence(spark, str(p), cfg))
-    _py(monkeypatch)
-    py = _rows(entropy_windows_from_evidence(spark, str(p), cfg))
-    assert jvm == py
-    # and the evidence path equals the chunk-table path (same grid)
-    monkeypatch.delenv("SPARK_GRAFT_NO_VEC_KERNEL")
+    jvm = _evidence_windows(spark, str(p), cfg)
+    assert len(jvm) == (1 << 19) // 256
+    assert jvm == _numpy_windows(spark, monkeypatch, data, cfg)
+    # and the evidence scan equals the JVM chunk-table kernel (same grid)
     chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
     assert jvm == _rows(entropy_windows(chunks, cfg))
 
@@ -135,9 +146,9 @@ def test_evidence_ewf_bit_exact(spark, monkeypatch, tmp_path):
     data = mixed_blob(11, 1 << 18)
     p = str(tmp_path / "evidence.E01")
     write_ewf(p, data)
-    jvm = _rows(entropy_windows_from_evidence(spark, p, cfg))
-    _py(monkeypatch)
-    assert jvm == _rows(entropy_windows_from_evidence(spark, p, cfg))
+    jvm = _evidence_windows(spark, p, cfg)
+    assert len(jvm) == (1 << 18) // 256
+    assert jvm == _numpy_windows(spark, monkeypatch, data, cfg)
 
 
 def test_trailing_partial_window_dropped(spark, monkeypatch):

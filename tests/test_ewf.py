@@ -188,7 +188,7 @@ def test_multi_segment_roundtrip(tmp_path):
 
 def test_multi_segment_jvm_scan_matches(spark, tmp_path):
     """The Java EWF reader must handle segment chains identically:
-    sb_scan_evidence over an E01+E02 image == scan of the raw bytes."""
+    sb_scan_all over an E01+E02 image == scan of the raw bytes."""
     from swiftbeaver_spark.config import DEFAULT_CONFIG
     from swiftbeaver_spark.jvm import ensure_kernel, spec_for
     from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns
@@ -210,11 +210,13 @@ def test_multi_segment_jvm_scan_matches(spark, tmp_path):
     write_ewf(e01, data, chunks_per_segment=5)
 
     patterns = compile_patterns(DEFAULT_CONFIG)
-    spec = spec_for(patterns, MAX_HITS_PER_CHUNK)
+    # one sub-chunk spanning the whole media; string/entropy lines empty
+    # ("\\n": the SQL literal turns the escapes into newlines)
+    spec = "\\n".join(["0", spec_for(patterns, MAX_HITS_PER_CHUNK), "", ""])
 
     def hits(path):
         [row] = spark.sql(
-            f"SELECT sb_scan_evidence('{path}', 0L, {len(data)}L, {len(data)}L, '{spec}') AS h"
+            f"SELECT sb_scan_all('{path}', 0L, {len(data)}L, '{spec}').hits AS h"
         ).collect()
         return sorted(int(h) for h in row["h"])
 
@@ -268,8 +270,10 @@ def test_short_final_chunk_roundtrip(spark, tmp_path):
         planted[len(data) - 100 : len(data) - 97] = sig
         p2 = str(tmp_path / f"short2_{variant}.E01")
         write_ewf(p2, bytes(planted), pad_final=False)
-        spec = spec_for(compile_patterns(DEFAULT_CONFIG), MAX_HITS_PER_CHUNK)
+        spec = "\\n".join(
+            ["0", spec_for(compile_patterns(DEFAULT_CONFIG), MAX_HITS_PER_CHUNK), "", ""]
+        )
         [row] = spark.sql(
-            f"SELECT sb_scan_evidence('{p2}', 0L, {len(planted)}L, {len(planted)}L, '{spec}') AS h"
+            f"SELECT sb_scan_all('{p2}', 0L, {len(planted)}L, '{spec}').hits AS h"
         ).collect()
         assert (len(data) - 100) in {int(h) >> 16 for h in row["h"]}

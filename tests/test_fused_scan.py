@@ -1,12 +1,13 @@
-"""One-pass multi-scan differentials (round 11, fused_scan.py).
+"""One-pass evidence scan differentials (fused_scan.py).
 
-scan_all_from_evidence must produce BYTE-IDENTICAL results to the
-three standalone evidence paths it fuses — signature hits
-(scanner.scan_evidence), string spans (strings_scan.
-spans_from_evidence) and entropy regions (entropy.
-entropy_regions_from_evidence) — on raw and EWF/E01 evidence, across
-content engineered to cross every sub-chunk boundary class (runs,
-patterns and high-entropy regions straddling granule edges).
+scan_all_from_evidence is the engine's only direct-evidence scan; its
+signature hits, string spans and entropy regions must equal the
+chunk-table path's (scanner.scan_and_normalize / strings_scan.
+scan_string_spans / entropy.entropy_regions over the parent chunks) on
+raw and EWF/E01 evidence, across content engineered to cross every
+sub-chunk boundary class (runs, patterns and high-entropy regions
+straddling granule edges), with each sub-scan switched on or off and
+for entropy windows that do not divide the granule.
 """
 
 from __future__ import annotations
@@ -16,12 +17,13 @@ import dataclasses
 import numpy as np
 import pytest
 
+from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.entropy import entropy_regions_from_evidence
+from swiftbeaver_spark.entropy import entropy_regions
 from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 from swiftbeaver_spark.jvm import ensure_kernel
-from swiftbeaver_spark.scanner import scan_evidence
-from swiftbeaver_spark.strings_scan import spans_from_evidence
+from swiftbeaver_spark.scanner import scan_and_normalize
+from swiftbeaver_spark.strings_scan import scan_string_spans
 
 from tests.fixtures import mk_jpeg, mk_png, mk_sqlite
 
@@ -46,7 +48,7 @@ CFG = dataclasses.replace(
     entropy_threshold=7.5,
     string_scan_utf16=True,
 )
-GRANULE = 512 << 10  # 8 sub-chunks per parent; window-aligned
+GRANULE = 512 << 10  # 8 sub-chunks per parent
 
 
 def build_image(seed: int, size: int) -> bytes:
@@ -79,25 +81,42 @@ def build_image(seed: int, size: int) -> bytes:
     return bytes(buf)
 
 
-def _cmp(spark, path):
-    t = scan_all_from_evidence(spark, path, CFG, granule=GRANULE)
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def chunk_table_rows(spark, data: bytes, cfg) -> dict[str, list[tuple]]:
+    """The chunk-table twin: every scan over the parent-geometry chunk
+    table built from the same bytes."""
+    chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
+    out = {"hits": _rows(scan_and_normalize(chunks, cfg))}
+    if cfg.enable_string_scan:
+        out["string_spans"] = _rows(scan_string_spans(chunks, cfg))
+    if cfg.enable_entropy_detection:
+        out["entropy_regions"] = _rows(entropy_regions(chunks, cfg))
+    return out
+
+
+def fused_rows(spark, path: str, cfg, granule=GRANULE) -> dict[str, list[tuple]]:
+    t = scan_all_from_evidence(spark, path, cfg, granule=granule)
     t["raw"].persist()
     try:
-        fused_hits = sorted(map(tuple, t["hits"].collect()))
-        base_hits = sorted(map(tuple, scan_evidence(spark, path, CFG).collect()))
-        assert fused_hits == base_hits and fused_hits
-        fused_spans = sorted(map(tuple, t["string_spans"].collect()))
-        base_spans = sorted(
-            map(tuple, spans_from_evidence(spark, path, CFG, granule=GRANULE).collect())
-        )
-        assert fused_spans == base_spans and fused_spans
-        fr = sorted(map(tuple, t["entropy_regions"].collect()))
-        br = sorted(
-            map(tuple, entropy_regions_from_evidence(spark, path, CFG).collect())
-        )
-        assert fr == br and fr
+        return {
+            name: _rows(t[name])
+            for name in ("hits", "string_spans", "entropy_regions")
+            if name in t
+        }
     finally:
         t["raw"].unpersist()
+
+
+def _cmp(spark, path, data, cfg=CFG, granule=GRANULE):
+    got = fused_rows(spark, path, cfg, granule)
+    want = chunk_table_rows(spark, data, cfg)
+    assert got.keys() == want.keys()
+    for name in want:
+        assert got[name] == want[name], name
+        assert got[name], name  # the content exercises every table
 
 
 @pytest.mark.parametrize("seed", [1, 2])
@@ -105,7 +124,7 @@ def test_fused_equals_standalone_raw(spark, tmp_path, seed):
     data = build_image(seed, 9 << 20)  # ragged tail past 2 parents
     p = tmp_path / "ev.raw"
     p.write_bytes(data)
-    _cmp(spark, str(p))
+    _cmp(spark, str(p), data)
 
 
 def test_fused_equals_standalone_e01(spark, tmp_path):
@@ -114,15 +133,55 @@ def test_fused_equals_standalone_e01(spark, tmp_path):
     data = build_image(3, 6 << 20)
     p = str(tmp_path / "ev.E01")
     write_ewf(p, data, sectors_per_chunk=8)
-    _cmp(spark, p)
+    _cmp(spark, p, data)
 
 
-def test_misaligned_entropy_geometry_raises(spark, tmp_path):
+@pytest.mark.parametrize("strings", [True, False], ids=["strings", "no_strings"])
+@pytest.mark.parametrize("entropy", [True, False], ids=["entropy", "no_entropy"])
+def test_sub_scan_toggles_equal_chunk_table(spark, tmp_path, strings, entropy):
+    """Each sub-scan can be switched off (an empty spec line): the
+    disabled tables are absent and the others are unchanged."""
+    data = build_image(4, 5 << 20)
     p = tmp_path / "ev.raw"
-    p.write_bytes(b"\x00" * (1 << 20))
-    bad = dataclasses.replace(CFG, entropy_window_size=3000)  # !| granule
-    with pytest.raises(ValueError, match="aligned"):
-        scan_all_from_evidence(spark, str(p), bad, granule=GRANULE)
+    p.write_bytes(data)
+    cfg = dataclasses.replace(
+        CFG, enable_string_scan=strings, enable_entropy_detection=entropy
+    )
+    _cmp(spark, str(p), data, cfg)
+
+
+def test_window_not_dividing_granule_equals_chunk_table(spark, tmp_path):
+    """A 3000-byte entropy window divides neither the granule nor the
+    chunk size: the sub-chunk length rounds up to whole windows, so
+    every parent keeps its own window grid (and drops the same
+    trailing partial window) with several sub-chunks per parent."""
+    data = build_image(5, 9 << 20)
+    p = tmp_path / "ev.raw"
+    p.write_bytes(data)
+    cfg = dataclasses.replace(CFG, entropy_window_size=3000)
+    t = scan_all_from_evidence(spark, str(p), cfg, granule=GRANULE)
+    starts = sorted(r["start"] for r in t["raw"].select("start").collect())
+    parent0 = [s for s in starts if s < cfg.chunk_size]
+    assert len(parent0) > 1 and all(s % 3000 == 0 for s in parent0)
+    _cmp(spark, str(p), data, cfg)
+
+
+def test_default_tiling_unchanged(spark):
+    """The default 512 MiB / 16 MiB / 4096 geometry is already window
+    aligned: 32 sub-chunks of exactly 16 MiB per parent."""
+    from swiftbeaver_spark.config import PY_SCAN_GRANULE
+    from swiftbeaver_spark.fused_scan import subchunk_plan
+
+    chunk = DEFAULT_CONFIG.chunk_size
+    total = 2 * chunk + 5
+    rows = _rows(subchunk_plan(spark, total, chunk, PY_SCAN_GRANULE, 4096))
+    want = [
+        (p * chunk + j * PY_SCAN_GRANULE, PY_SCAN_GRANULE)
+        for p in range(2)
+        for j in range(chunk // PY_SCAN_GRANULE)
+    ] + [(2 * chunk, 5)]
+    assert rows == want
+    assert rows == _rows(subchunk_plan(spark, total, chunk, PY_SCAN_GRANULE, 1))
 
 
 def test_requires_jvm_kernel(spark, tmp_path):
@@ -133,7 +192,7 @@ def test_requires_jvm_kernel(spark, tmp_path):
     saved = getattr(spark, jvm_mod._MARKER, None)
     try:
         setattr(spark, jvm_mod._MARKER, False)
-        with pytest.raises(ValueError, match="JVM kernel"):
+        with pytest.raises(RuntimeError, match="JVM kernel.*chunk_join=True"):
             scan_all_from_evidence(spark, str(p), CFG, granule=GRANULE)
     finally:
         setattr(spark, jvm_mod._MARKER, saved)

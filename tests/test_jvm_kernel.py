@@ -1,4 +1,4 @@
-"""JVM Aho-Corasick kernel equivalence: sb_scan_bytes / sb_scan_evidence
+"""JVM Aho-Corasick kernel equivalence: sb_scan_bytes / sb_scan_all
 must produce exactly the Python kernel's hits (overlapping matches,
 shared-prefix patterns, window-straddling matches, chunk geometry).
 
@@ -26,6 +26,7 @@ from swiftbeaver_spark.scanner import (
 )
 
 from tests.fixtures import ALL_FIXTURES
+from tests.gate_reference import python_gated_hits
 
 PATTERNS = compile_patterns(DEFAULT_CONFIG)
 
@@ -80,53 +81,69 @@ def test_bytes_udf_overlap_and_shared_prefix(spark):
     assert {ftid for (o, _, ftid) in got if o == 45} == {"webp", "wav", "avi"}
 
 
+def _scan_all_hits(spark, path: str, vlen: int, overlap: int) -> list[int]:
+    """Packed hits of one sb_scan_all call over [0, vlen) (string and
+    entropy sub-scans off: empty spec lines)."""
+    # "\\n" escapes: the SQL string literal turns them into the newlines
+    # that separate the spec lines
+    spec = "\\n".join([str(overlap), spec_for(PATTERNS, MAX_HITS_PER_CHUNK), "", ""])
+    [row] = spark.sql(
+        f"SELECT sb_scan_all('{path}', 0L, {vlen}L, '{spec}').hits AS h"
+    ).collect()
+    return sorted(int(h) for h in row["h"])
+
+
+def test_sources_match_java_files():
+    """jvm._SOURCES must name exactly the .java files in
+    java/src/sbspark/: a stale entry makes javac fail, the kernel then
+    stays unregistered, and every evidence run raises."""
+    import os
+
+    import swiftbeaver_spark.jvm as jvm_mod
+
+    src = os.path.join(jvm_mod._JAVA_DIR, "src", "sbspark")
+    on_disk = {f for f in os.listdir(src) if f.endswith(".java")}
+    assert sorted(jvm_mod._SOURCES) == sorted(on_disk)
+
+
 def test_evidence_udf_streams_across_io_windows(spark, tmp_path):
-    """A match straddling the kernel's 4 MiB read window must be found
-    (automaton state carries across refills)."""
+    """A match straddling the end of a sub-chunk's owned range must be
+    found by that sub-chunk: its read block runs `overlap` bytes past
+    valid_length. Matches starting inside the overlap tail come back
+    with offsets >= valid_length (normalize_hits drops them)."""
     assert ensure_kernel(spark)
     win = 4 << 20
     sig = bytes.fromhex("FFD8FF")
     buf = bytearray(win + 64)
     buf[win - 1 : win + 2] = sig  # 1 byte before the boundary, 2 after
+    buf[win + 10 : win + 13] = sig  # owned by the next sub-chunk
     buf[10:13] = sig
     path = str(tmp_path / "ev.bin")
     with open(path, "wb") as fh:
         fh.write(bytes(buf))
-    spec = spec_for(PATTERNS, MAX_HITS_PER_CHUNK)
-    [row] = spark.sql(
-        f"SELECT sb_scan_evidence('{path}', 0L, {len(buf)}L, {len(buf)}L, '{spec}') AS h"
-    ).collect()
-    offs = {int(h) >> 16 for h in row["h"] if PATTERNS[int(h) & 0xFFFF][1] == "jpeg_soi"}
-    assert {10, win - 1} <= offs
+    hits = _scan_all_hits(spark, path, win, overlap=32)
+    offs = {h >> 16 for h in hits if PATTERNS[h & 0xFFFF][1] == "jpeg_soi"}
+    assert offs == {10, win - 1, win + 10}
 
 
 def test_scan_evidence_jvm_equals_python(spark, tmp_path):
-    """Full fused operator: JVM path output == Python path output on the
-    same evidence + chunk geometry (including overlap dedup)."""
+    """Full evidence operator: the JVM scan (gates included) equals the
+    Python reference — every pattern occurrence minus the gated hits
+    the Python gate checks reject — over several chunks and sub-chunks
+    (overlap dedup included)."""
+    import dataclasses
+
     blob = planted_blob(99, size=300_000)
     path = str(tmp_path / "ev.bin")
     with open(path, "wb") as fh:
         fh.write(blob)
-    import dataclasses
-
     cfg = dataclasses.replace(DEFAULT_CONFIG, chunk_size=64 * 1024, overlap=4096)
 
     got_jvm = {
         (r.global_offset, r.pattern_id, r.file_type_id)
         for r in scan_evidence(spark, path, cfg).collect()
     }
-    # force the Python path by monkeypatching availability
-    import swiftbeaver_spark.jvm as jvm_mod
-
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        got_py = {
-            (r.global_offset, r.pattern_id, r.file_type_id)
-            for r in scan_evidence(spark, path, cfg).collect()
-        }
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
+    got_py = {(off, pid, ftid) for off, ftid, pid in python_gated_hits(blob, cfg)}
     assert got_jvm == got_py != set()
 
 
@@ -155,7 +172,7 @@ def test_scan_chunks_jvm_equals_python(spark):
 
 
 def test_evidence_udf_reads_e01_natively(spark, tmp_path):
-    """sb_scan_evidence on an E01 container must yield the same hits as
+    """sb_scan_all on an E01 container must yield the same hits as
     on the raw image — chunk-table parse + zlib decompression + scan all
     inside the JVM, matches straddling EWF chunk boundaries included."""
     from swiftbeaver_spark.ewf import write_ewf
@@ -173,16 +190,8 @@ def test_evidence_udf_reads_e01_natively(spark, tmp_path):
     e01_path = str(tmp_path / "ev.E01")
     write_ewf(e01_path, blob)
 
-    spec = spec_for(PATTERNS, MAX_HITS_PER_CHUNK)
-
-    def hits(path, length):
-        [row] = spark.sql(
-            f"SELECT sb_scan_evidence('{path}', 0L, {length}L, {length}L, '{spec}') AS h"
-        ).collect()
-        return sorted(int(h) for h in row["h"])
-
-    got_raw = hits(raw_path, len(blob))
-    got_e01 = hits(e01_path, len(blob))
+    got_raw = _scan_all_hits(spark, raw_path, len(blob), overlap=4096)
+    got_e01 = _scan_all_hits(spark, e01_path, len(blob), overlap=4096)
     assert got_e01 == got_raw != []
     assert ((cs - 1) << 16) in [h & ~0xFFFF for h in got_e01]  # boundary match found
 
@@ -326,7 +335,7 @@ def test_scan_plan_stays_jvm_side(spark, tmp_path):
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = jexec.explainString(mode)
     assert "EvalPython" not in plan, plan
-    assert "sb_scan_evidence" in plan
+    assert "sb_scan_all" in plan
 
 
 def test_simhash_jvm_matches_numpy(spark):

@@ -1,7 +1,7 @@
 """Scan-time mp3 bare-sync gate (round 13): the carver's 3-consecutive-
 valid-frames rule (carve_mp3, reference src/carve/mp3.rs:189-330),
-hoisted into the evidence-path scans (ScanGates.java + the Python
-fallback's _mp3_sync_ok). Contract:
+hoisted into the evidence scan (ScanGates.java; Python reference
+tests/gate_reference.py). Contract:
 
 - evidence-path hits DROP exactly the bare-sync hits the carver would
   reject (invalid header chain, TAG marker, EOF inside the walk);
@@ -9,7 +9,8 @@ fallback's _mp3_sync_ok). Contract:
 - carved rows are byte-identical with the gate on (evidence-path hits)
   and off (manually supplied ungated hits) — the gate only removes
   hits that carve to None;
-- JVM and Python-fallback scans agree hit-for-hit, raw and E01 alike.
+- the JVM gate agrees hit-for-hit with the Python reference, raw and
+  E01 alike.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import pytest
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.scanner import scan_evidence
+from tests.gate_reference import python_gated_hits
 
 MP3_CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -80,6 +82,13 @@ def _scan_offsets(spark, path: str) -> dict[str, set[int]]:
     return out
 
 
+def _reference_offsets(buf: bytes) -> dict[str, set[int]]:
+    out: dict[str, set[int]] = {}
+    for off, _, pid in python_gated_hits(buf, MP3_CFG):
+        out.setdefault(pid, set()).add(off)
+    return out
+
+
 def test_gate_drops_false_syncs_keeps_real(spark, tmp_path):
     buf, kept, dropped = _evidence()
     path = str(tmp_path / "mp3.raw")
@@ -97,16 +106,7 @@ def test_gate_python_fallback_identical(spark, tmp_path):
     path = str(tmp_path / "mp3.raw")
     with open(path, "wb") as fh:
         fh.write(buf)
-    import swiftbeaver_spark.jvm as jvm_mod
-
-    got_jvm = _scan_offsets(spark, path)
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        got_py = _scan_offsets(spark, path)
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm == got_py
+    assert _scan_offsets(spark, path) == _reference_offsets(buf)
 
 
 def test_gate_fuzzed_jvm_equals_python(spark, tmp_path):
@@ -121,16 +121,8 @@ def test_gate_fuzzed_jvm_equals_python(spark, tmp_path):
     path = str(tmp_path / "fuzz.raw")
     with open(path, "wb") as fh:
         fh.write(bytes(buf))
-    import swiftbeaver_spark.jvm as jvm_mod
-
     got_jvm = _scan_offsets(spark, path)
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        got_py = _scan_offsets(spark, path)
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm == got_py
+    assert got_jvm == _reference_offsets(bytes(buf))
     assert any(got_jvm.values())
 
 

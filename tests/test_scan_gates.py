@@ -1,8 +1,9 @@
 """bmp / ico scan-time gates (round 13, generalizing the mp3 gate —
 see tests/test_mp3_gate.py for the m3 contract). Same soundness rule:
 a gate drops a hit only when the evidence bytes prove the carver would
-return None; carved rows are identical with the gate on or off; JVM
-and Python-fallback scans agree hit-for-hit, raw and E01 alike.
+return None; carved rows are identical with the gate on or off; the
+JVM gates agree hit-for-hit with the Python reference
+(tests/gate_reference.py), raw and E01 alike.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import struct
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.scanner import scan_evidence
 from tests.fixtures import mk_bmp
+from tests.gate_reference import python_gated_hits
 
 GATE_CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -78,6 +80,13 @@ def _scan_offsets(spark, path: str) -> dict[str, set[int]]:
     return out
 
 
+def _reference_offsets(buf: bytes) -> dict[str, set[int]]:
+    out: dict[str, set[int]] = {}
+    for off, ftid, _ in python_gated_hits(buf, GATE_CFG):
+        out.setdefault(ftid, set()).add(off)
+    return out
+
+
 def test_gates_drop_false_headers_keep_real(spark, tmp_path):
     buf, kept, dropped = _evidence()
     path = str(tmp_path / "gate.raw")
@@ -104,16 +113,8 @@ def test_gates_python_fallback_and_e01_identical(spark, tmp_path):
     e01 = str(tmp_path / "gate.E01")
     write_ewf(e01, bytes(buf))
 
-    import swiftbeaver_spark.jvm as jvm_mod
-
     got_jvm = _scan_offsets(spark, path)
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        got_py = _scan_offsets(spark, path)
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm == got_py
+    assert got_jvm == _reference_offsets(bytes(buf))
     assert _scan_offsets(spark, e01) == got_jvm
 
 
@@ -158,7 +159,7 @@ def test_bmp_min_size_hoisted_into_gate(spark, tmp_path):
     finalize()'s min-size rejection (carvers/base.py:219) is a pure
     function of the declared size, which the carved size can only
     shrink, so the drop is provably what the pipeline would do. JVM
-    and Python-fallback verdicts agree; the ungated hit carves to
+    and Python-reference verdicts agree; the ungated hit carves to
     zero rows, proving soundness directly."""
     import dataclasses as dc
 
@@ -178,24 +179,13 @@ def test_bmp_min_size_hoisted_into_gate(spark, tmp_path):
     with open(path, "wb") as fh:
         fh.write(bytes(buf))
 
-    import swiftbeaver_spark.jvm as jvm_mod
-
     jvm_hits = {
         r.global_offset
         for r in scan_evidence(spark, path, cfg).collect()
         if r.file_type_id == "bmp"
     }
     assert 1_000 not in jvm_hits
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        py_hits = {
-            r.global_offset
-            for r in scan_evidence(spark, path, cfg).collect()
-            if r.file_type_id == "bmp"
-        }
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
+    py_hits = {off for off, ftid, _ in python_gated_hits(bytes(buf), cfg) if ftid == "bmp"}
     assert py_hits == jvm_hits
 
     # soundness: the carver itself rejects the very hit the gate dropped
